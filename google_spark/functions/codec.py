@@ -299,3 +299,27 @@ def not_deleted_mask(docs: "np.ndarray", deletes: "np.ndarray") -> "np.ndarray":
     idx = np.searchsorted(deletes, docs)
     idx_c = np.minimum(idx, len(deletes) - 1)
     return ~((idx < len(deletes)) & (deletes[idx_c] == docs))
+
+
+def decode_live(data: bytes, deletes=None):
+    """:func:`decode_postings_arrays` with merge-on-read deletes masked
+    out: (doc_ids, tfs, dls) of the live documents only. ``deletes`` is
+    the sorted int64 delete array (None or empty: nothing deleted)."""
+    docs, tfs, dls = decode_postings_arrays(data)
+    if deletes is not None and len(deletes):
+        keep = not_deleted_mask(docs, deletes)
+        if not keep.all():
+            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+    return docs, tfs, dls
+
+
+def decode_live_full(data: bytes, deletes=None):
+    """:func:`decode_postings_full_np` with merge-on-read deletes masked
+    out: (doc_ids, tfs, dls, positions) of the live documents only."""
+    docs, tfs, dls, pos = decode_postings_full_np(data)
+    if deletes is not None and len(deletes):
+        keep = not_deleted_mask(docs, deletes)
+        if not keep.all():
+            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+            pos = [p for p, kp in zip(pos, keep) if kp]
+    return docs, tfs, dls, pos

@@ -838,13 +838,7 @@ class SnapshotCatalog:
                 for d in seg_dirs
             ],
         )
-        terms = seg_terms.groupBy("term").agg(F.sum("df").alias("df")).withColumn(
-            "idf",
-            F.log(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
+        terms = term_stats(seg_terms, n_docs)
         return IndexTables(
             postings=postings,
             terms=terms,
@@ -981,10 +975,7 @@ def _rewrite_postings(postings: DataFrame, deletes: np.ndarray | None) -> DataFr
     encode exchange."""
 
     def kernel(pdf):
-        from google_spark.functions.codec import (
-            decode_postings_full_np,
-            not_deleted_mask,
-        )
+        from google_spark.functions.codec import decode_live_full
 
         shard = int(pdf["shard"].iloc[0])
 
@@ -992,7 +983,7 @@ def _rewrite_postings(postings: DataFrame, deletes: np.ndarray | None) -> DataFr
             for term, g in pdf.groupby("term", sort=False):
                 d_parts, t_parts, l_parts, p_parts = [], [], [], []
                 for blob in g["postings"]:
-                    d, t, l, p = decode_postings_full_np(bytes(blob))
+                    d, t, l, p = decode_live_full(bytes(blob), deletes)
                     d_parts.append(d)
                     t_parts.append(t)
                     l_parts.append(l)
@@ -1000,11 +991,6 @@ def _rewrite_postings(postings: DataFrame, deletes: np.ndarray | None) -> DataFr
                 docs = np.concatenate(d_parts)
                 tfs = np.concatenate(t_parts)
                 dls = np.concatenate(l_parts)
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(docs, deletes)
-                    if not keep.all():
-                        docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-                        p_parts = [p for p, k in zip(p_parts, keep) if k]
                 if not len(docs):
                     continue
                 order = np.argsort(docs, kind="stable")

@@ -38,6 +38,8 @@ def funnel_counts(
     """
     if not steps:
         raise ValueError("steps must be non-empty")
+    if len(set(steps)) != len(steps):
+        raise ValueError(f"duplicate funnel steps: {steps}")
     spark = events.sparkSession
     step_idx = F.create_map(
         *[x for i, s in enumerate(steps) for x in (F.lit(s), F.lit(i))]

@@ -206,10 +206,7 @@ def _field_component_rows(
     ``w_f * tf / ((1-b_f) + b_f * dl / avgdl_f)`` — decoded straight off
     the pruned postings scan, no shuffle (float op order mirrors
     ranking.bm25f_topk / the DuckDB oracle exactly)."""
-    from google_spark.functions.codec import (
-        decode_postings_arrays,
-        not_deleted_mask,
-    )
+    from google_spark.functions.codec import decode_live
 
     avgdl = idx.avgdl
     deletes = idx.deletes
@@ -219,10 +216,7 @@ def _field_component_rows(
         for pdf in batches:
             t_out, d_out, c_out = [], [], []
             for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                docs, tfs, dls = decode_postings_arrays(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(docs, deletes)
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+                docs, tfs, dls = decode_live(bytes(blob), deletes)
                 if not len(docs):
                     continue
                 comp = (
@@ -273,9 +267,9 @@ def bm25f_local_topk(
     field name -> a decoded-row cache dict (e.g. search.PostingsCache) for
     hot-term reuse across queries. ``weights`` maps EXTRA-field names to
     (w_f, b_f) — title/body only through their dedicated kwargs."""
-    import math
     from collections import Counter
 
+    from google_spark.functions import bm25
     from google_spark.operators.index_query import _entries_for
     from google_spark.operators.ranking import normalize_query
 
@@ -317,7 +311,7 @@ def bm25f_local_topk(
         u, inv = np.unique(docs, return_inverse=True)
         tfw = np.bincount(inv, weights=comps)  # field combination pre-k1
         df = len(u)
-        widf = float(qf[t]) * math.log((n - df + 0.5) / (df + 0.5) + 1.0)
+        widf = float(qf[t]) * bm25.idf(n, df)
         d_parts.append(u)
         s_parts.append(widf * tfw / (k1 + tfw))
     if not d_parts:
@@ -353,9 +347,9 @@ def bm25f_index_topk(
     their ``(w_f, b_f)`` pair (anchors, etc.); unlisted extra fields
     default to ``(1.0, 0.75)``, and title/body keep their dedicated
     keyword arguments."""
-    import math
     from collections import Counter
 
+    from google_spark.functions import bm25
     from google_spark.operators.ranking import normalize_query
 
     some_idx = next(iter(findex.fields.values()))
@@ -394,8 +388,7 @@ def bm25f_index_topk(
     )
     n = findex.n_docs
     widf = {
-        r["term"]: float(qf[r["term"]])
-        * math.log((n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0)
+        r["term"]: float(qf[r["term"]]) * bm25.idf(n, int(r["df"]))
         for r in df_rows
     }
     if not widf:

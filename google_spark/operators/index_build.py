@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from google_spark.functions import bm25
 from google_spark.functions.codec import block_metadata, encode_postings
 from google_spark.functions.tokenizer import tokenize
 
@@ -253,8 +254,7 @@ def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
     finalize pass, ref: src/cis5550/jobs/Indexer.java:234-246, with
     ln(N/df) replaced by the BM25 idf)."""
     return postings.groupBy("term").agg(F.sum("df").alias("df")).withColumn(
-        "idf",
-        F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+        "idf", bm25.idf_col(n_docs, F.col("df"))
     )
 
 
@@ -266,7 +266,6 @@ def build_index(
     mode: str = "simple",
     stem: bool = False,
     n_shards: int = 8,
-    persist_tokens: bool = True,  # kept for API compat; tokens now stream
     total_docs: int | None = None,
     max_postings_per_term: int | None = None,
 ) -> IndexTables:

@@ -8,10 +8,16 @@ Two engines, required to be rank-identical (tested):
   The declarative baseline (the analog of the reference's singleSearch full
   scan, ref: src/cis5550/jobs/RankScore.java:147-185, minus its per-word KVS
   RPCs).
-- ``wand_topk``: per-shard document-at-a-time WAND with term upper bounds and
-  block-max refinement in a NumPy ``applyInPandas`` kernel, then a global
-  top-k merge. Because shards partition the doc_id universe, per-shard WAND
-  is exact and embarrassingly parallel — the scale path.
+- ``wand_topk``: per-shard exact top-k in a NumPy ``applyInPandas`` kernel
+  (vectorized scoring, or a block-max segment sweep that skips blocks whose
+  BM25 upper bound cannot reach the top-k — see :func:`_kernel_decoded`),
+  then a global top-k merge. Because shards partition the doc_id universe,
+  the per-shard top-k is exact and embarrassingly parallel — the scale
+  path.
+
+Every path scores with ``functions.bm25`` and decodes postings with
+merge-on-read deletes masked through ``codec.decode_live``/
+``decode_live_full``.
 
 Ties break (score desc, doc_id asc) everywhere, including the oracle.
 """
@@ -26,8 +32,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from google_spark import BM25_B, BM25_K1
-from google_spark.functions.codec import decode_postings_arrays, not_deleted_mask
+from google_spark.functions import bm25
+from google_spark.functions.codec import decode_live, decode_live_full, not_deleted_mask
+
+# not called here: the traced benchmark (perfbench/spans.py) wraps this
+# module attribute by name
+from google_spark.functions.codec import decode_postings_arrays  # noqa: F401
 from google_spark.functions.tokenizer import tokenize
 from google_spark.operators.index_build import IndexTables
 
@@ -41,50 +51,47 @@ def query_terms(query: str, mode: str = "simple", stem: bool = False) -> list[st
 
 DECODED_SCHEMA = "term string, doc_id long, tf int, dl int"
 
-# Candidate-set size below which the shard kernel scores vectorized instead
-# of running the WAND pivot loop (module-level so tests can force either).
-# The vectorized accumulation is O(total postings) with NumPy constants
-# (~30M postings/sec) and ~16 bytes/posting transient memory; the pivot
-# loop's python-level per-document cost only amortizes once a kernel's
-# candidate set is in the many-millions. 5M postings ≈ 80 MB transient.
+# Candidate-set size (postings) up to which the shard kernel scores
+# everything vectorized; above it, it runs the block-max segment sweep
+# (module-level so tests can force either). The vectorized accumulation is
+# O(total postings) with ~16 bytes/posting transient memory (5M postings
+# ≈ 80 MB). Neither path wins everywhere: measured with _kernel_decoded
+# called directly and each path forced (4-vCPU VM, NumPy 1.26.4), the sweep
+# was 1.3-1.6x SLOWER than the vectorized path on 2-3-term queries of
+# 6-25M postings, and 1.9-2.4x faster on a single 12M-posting term; both
+# returned identical results.
 WAND_FASTPATH_MAX = 5_000_000
 
 
-def _decode_matching(matching: DataFrame, terms: list[str]) -> DataFrame:
-    """Decode the matching postings blobs into (term, doc_id, tf, dl) rows.
-    ``matching`` comes from IndexTables.matching(): term filter pushed to
-    the parquet scan plus bucket partition pruning on disk-backed indexes."""
+def _decode_matching(matching: DataFrame, deletes=None) -> DataFrame:
+    """Decode the matching postings blobs into (term, doc_id, tf, dl) rows
+    of live documents (merge-on-read ``deletes`` masked in the kernel).
+    ``matching`` is a posting-row relation such as IndexTables.matching():
+    term filter pushed to the parquet scan plus bucket partition pruning
+    on disk-backed indexes."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             t_out, d_out, tf_out, dl_out = [], [], [], []
             for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls = decode_postings_arrays(bytes(blob))
+                doc_ids, tfs, dls = decode_live(bytes(blob), deletes)
                 t_out.extend([term] * len(doc_ids))
-                d_out.extend(doc_ids)
-                tf_out.extend(tfs)
-                dl_out.extend(dls)
-            yield pd.DataFrame(
-                {
-                    "term": t_out,
-                    "doc_id": pd.Series(d_out, dtype="int64"),
-                    "tf": pd.Series(tf_out, dtype="int32"),
-                    "dl": pd.Series(dl_out, dtype="int32"),
-                }
-            )
+                d_out.append(doc_ids)
+                tf_out.append(tfs)
+                dl_out.append(dls)
+            if d_out:
+                yield pd.DataFrame(
+                    {
+                        "term": pd.Series(t_out, dtype="object"),
+                        "doc_id": pd.Series(np.concatenate(d_out), dtype="int64"),
+                        "tf": pd.Series(np.concatenate(tf_out), dtype="int32"),
+                        "dl": pd.Series(np.concatenate(dl_out), dtype="int32"),
+                    }
+                )
 
     return matching.select("term", "postings").mapInPandas(
         gen, schema=DECODED_SCHEMA
     )
-
-
-def bm25_score_col(avgdl: float) -> F.Column:
-    """JVM-side BM25 term score given columns tf, dl, idf and weight."""
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-    )
-    return F.col("weight") * F.col("idf") * tf * F.lit(BM25_K1 + 1.0) / denom
 
 
 def exhaustive_topk(
@@ -145,8 +152,7 @@ def weighted_topk(
         }
     else:
         widf = {
-            r["term"]: float(qf[r["term"]])
-            * math.log((n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0)
+            r["term"]: float(qf[r["term"]]) * bm25.idf(n, int(r["df"]))
             for r in df_rows
         }
     avgdl = index.avgdl
@@ -156,22 +162,12 @@ def weighted_topk(
         for pdf in batches:
             d_out, s_out = [], []
             for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls = decode_postings_arrays(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(doc_ids, deletes)
-                    doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
+                doc_ids, tfs, dls = decode_live(bytes(blob), deletes)
                 w = widf[term]
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
                 if scoring == "ref_tfidf":
-                    scores = w * tf / dl
+                    scores = w * tfs / dls
                 else:
-                    scores = (
-                        w
-                        * tf
-                        * (BM25_K1 + 1.0)
-                        / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                    )
+                    scores = bm25.term_scores(w, tfs, dls, avgdl)
                 d_out.append(doc_ids)
                 s_out.append(scores)
             if d_out:
@@ -250,12 +246,9 @@ def boolean_topk(
     must_set = set(must)
     matching = index.matching(list(qf))
     df_rows = matching.groupBy("term").agg(F.sum("df").alias("df")).collect()
-    import math
-
     n = index.n_docs
     widf = {
-        r["term"]: float(qf[r["term"]])
-        * math.log((n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0)
+        r["term"]: float(qf[r["term"]]) * bm25.idf(n, int(r["df"]))
         for r in df_rows
     }
     avgdl = index.avgdl
@@ -265,19 +258,8 @@ def boolean_topk(
         for pdf in batches:
             d_out, s_out, m_out = [], [], []
             for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls = decode_postings_arrays(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(doc_ids, deletes)
-                    doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
-                w = widf[term]
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                scores = (
-                    w
-                    * tf
-                    * (BM25_K1 + 1.0)
-                    / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                )
+                doc_ids, tfs, dls = decode_live(bytes(blob), deletes)
+                scores = bm25.term_scores(widf[term], tfs, dls, avgdl)
                 d_out.append(doc_ids)
                 s_out.append(scores)
                 m_out.append(
@@ -300,9 +282,9 @@ def boolean_topk(
     )
     cand = agg.filter(F.col("n_must") == len(must_set)) if must_set else agg
     if must_not:
-        excl = _decode_matching(
-            index.matching(sorted(set(must_not))), sorted(set(must_not))
-        ).select("doc_id").distinct()
+        excl = _decode_matching(index.matching(sorted(set(must_not)))).select(
+            "doc_id"
+        ).distinct()
         cand = cand.join(excl, "doc_id", "left_anti")
     return (
         cand.select("doc_id", "score")
@@ -464,36 +446,18 @@ def explain_topk(
     qf = Counter(query_terms(query, mode=mode))
     if not qf:
         return spark.createDataFrame([], out_schema)
-    import math
-
     matching = index.matching(sorted(qf))
     df_rows = matching.groupBy("term").agg(F.sum("df").alias("df")).collect()
     n = index.n_docs
-    idf = {
-        r["term"]: math.log(
-            (n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0
-        )
-        for r in df_rows
-    }
+    idf = {r["term"]: bm25.idf(n, int(r["df"])) for r in df_rows}
     if not idf:
         return spark.createDataFrame([], out_schema)
-    decoded = _decode_matching(matching, sorted(qf))
-    deletes = index.deletes
-    if deletes is not None and len(deletes):
-        del_df = spark.createDataFrame(
-            [(int(x),) for x in deletes], "doc_id long"
-        )
-        decoded = decoded.join(F.broadcast(del_df), "doc_id", "left_anti")
+    decoded = _decode_matching(matching, index.deletes)
     idf_col = F.lit(None).cast("double")
     w_col = F.lit(None).cast("double")
     for t in sorted(idf):
         idf_col = F.when(F.col("term") == t, F.lit(idf[t])).otherwise(idf_col)
         w_col = F.when(F.col("term") == t, F.lit(float(qf[t]))).otherwise(w_col)
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B)
-        + F.lit(BM25_B) * F.col("dl") / F.lit(index.avgdl)
-    )
     rows = decoded.select(
         "doc_id",
         "term",
@@ -501,9 +465,9 @@ def explain_topk(
         "tf",
         "dl",
         idf_col.alias("idf"),
-        (w_col * idf_col * tf * F.lit(BM25_K1 + 1.0) / denom).alias(
-            "contribution"
-        ),
+        bm25.term_score_col(
+            w_col * idf_col, F.col("tf"), F.col("dl"), index.avgdl
+        ).alias("contribution"),
     ).withColumn(
         "score", F.sum("contribution").over(Window.partitionBy("doc_id"))
     )
@@ -528,19 +492,13 @@ def positional_postings(index: IndexTables, terms: list[str]) -> DataFrame:
     shards partition the doc_id universe, so each (term, doc_id) appears
     exactly once. Cost follows the queried terms' posting lists, never
     the corpus."""
-    from google_spark.functions.codec import decode_postings_full_np
-
     deletes = index.deletes
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             t_out, d_out, tf_out, dl_out, p_out = [], [], [], [], []
             for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls, pos = decode_postings_full_np(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(doc_ids, deletes)
-                    doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
-                    pos = [p for p, kp in zip(pos, keep) if kp]
+                doc_ids, tfs, dls, pos = decode_live_full(bytes(blob), deletes)
                 t_out.extend([term] * len(doc_ids))
                 d_out.extend(doc_ids)
                 tf_out.extend(tfs)
@@ -587,8 +545,6 @@ def near_topk(
         raise ValueError("near_topk needs two distinct terms")
     if max_gap < 1:
         raise ValueError("max_gap must be >= 1")
-    import math
-
     spark = index.postings.sparkSession
     out_schema = "doc_id long, min_gap int, score double"
     rel = positional_postings(index, sorted({term_a, term_b}))
@@ -601,23 +557,11 @@ def near_topk(
     dfm = {r["term"]: int(r["df"]) for r in df_rows}
     if term_a not in dfm or term_b not in dfm:
         return spark.createDataFrame([], out_schema)
-    n = index.n_docs
-    idf = {
-        t: math.log((n - d + 0.5) / (d + 0.5) + 1.0) for t, d in dfm.items()
-    }
-    avgdl = index.avgdl
+    idf = {t: bm25.idf(index.n_docs, d) for t, d in dfm.items()}
 
-    def bm25(tf_col: str, w: float) -> F.Column:
-        tf = F.col(tf_col).cast("double")
-        return (
-            F.lit(w)
-            * tf
-            * (BM25_K1 + 1.0)
-            / (
-                tf
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
-            )
+    def score(tf_col: str, term: str) -> F.Column:
+        return bm25.term_score_col(
+            F.lit(idf[term]), F.col(tf_col), F.col("dl"), index.avgdl
         )
 
     a = rel.filter(F.col("term") == term_a).select(
@@ -658,9 +602,7 @@ def near_topk(
         .select(
             "doc_id",
             gap.alias("min_gap"),
-            (bm25("tf_a", idf[term_a]) + bm25("tf_b", idf[term_b])).alias(
-                "score"
-            ),
+            (score("tf_a", term_a) + score("tf_b", term_b)).alias("score"),
         )
         .filter(F.col("min_gap").isNotNull() & (F.col("min_gap") <= max_gap))
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -686,11 +628,11 @@ def facet_counts(
     Scale shape: candidates come from ONE pruned index scan (term filter
     pushed to the parquet scan + bucket partition pruning) reduced to a
     distinct doc_id relation — cost proportional to the query terms'
-    posting lists, never the corpus; merge-on-read deletes are removed
-    with a left-anti join against the (driver-resident) delete vector.
-    The metadata join is doc_id-keyed, and each facet is a hash aggregate
-    over the candidate rows; the per-facet frames union AFTER aggregation,
-    so the union carries |distinct values| rows, not candidates."""
+    posting lists, never the corpus; merge-on-read deletes are masked in
+    the decode kernel. The metadata join is doc_id-keyed, and each facet
+    is a hash aggregate over the candidate rows; the per-facet frames
+    union AFTER aggregation, so the union carries |distinct values| rows,
+    not candidates."""
     spark = index.postings.sparkSession
     if facet_cols is None:
         facet_cols = ["lang", "source"]
@@ -699,16 +641,10 @@ def facet_counts(
     if not terms:
         return spark.createDataFrame([], out_schema)
     cand = (
-        _decode_matching(index.matching(terms), terms)
+        _decode_matching(index.matching(terms), index.deletes)
         .select(F.col("doc_id").alias(id_col))
         .distinct()
     )
-    deletes = index.deletes
-    if deletes is not None and len(deletes):
-        del_df = spark.createDataFrame(
-            [(int(x),) for x in deletes], f"{id_col} long"
-        )
-        cand = cand.join(F.broadcast(del_df), id_col, "left_anti")
     matched = meta.join(cand, id_col)
     parts = [
         matched.groupBy(F.col(c).cast("string").alias("value")).agg(
@@ -727,7 +663,7 @@ def _topk_from_arrays(
 ) -> pd.DataFrame:
     """Exact top-k (score desc, doc_id asc) from per-term (docs, scores)
     arrays: one unique + bincount accumulation, boundary ties kept."""
-    if not d_parts:
+    if not d_parts or k < 1:
         return pd.DataFrame(
             {
                 "doc_id": pd.Series([], dtype="int64"),
@@ -814,11 +750,7 @@ def _decode_posting_row(row, deletes=None) -> dict:
     stored (pre-delete) values: df keeps idf consistent across every query
     path until compaction, and block maxima remain valid UPPER bounds when
     docs are removed, so WAND pruning stays exact."""
-    docs, tfs, dls = decode_postings_arrays(bytes(row["postings"]))
-    if deletes is not None and len(deletes):
-        keep = not_deleted_mask(docs, deletes)
-        if not keep.all():
-            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+    docs, tfs, dls = decode_live(bytes(row["postings"]), deletes)
     return {
         "term": row["term"],
         "df": int(row["df"]),
@@ -880,12 +812,8 @@ def _kernel_decoded(
     cols: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
     for e in entries:
         w = weights[e["term"]] * idf[e["term"]]
-        tf, dl = e["tf"], e["dl"]
-        scores = w * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-        bmax, bmin = e["bmax"], e["bmin"]
-        ub_blocks = w * bmax * (BM25_K1 + 1.0) / (
-            bmax + BM25_K1 * (1.0 - BM25_B + BM25_B * bmin / avgdl)
-        )
+        scores = bm25.term_scores(w, e["tf"], e["dl"], avgdl)
+        ub_blocks = bm25.term_scores(w, e["bmax"], e["bmin"], avgdl)
         cols.append((e["docs"], scores, ub_blocks, e["bl"]))
     cols = [c for c in cols if len(c[0])]
     if not cols:
@@ -1009,11 +937,6 @@ def batch_topk(
     Queries that tokenize to nothing (or match no indexed term) simply
     produce no output rows — same contract as ``wand_topk`` returning an
     empty frame."""
-    spark = index.postings.sparkSession
-    deletes = index.deletes
-    n = index.n_docs
-    avgdl = index.avgdl
-
     # query ids keep their source type (eval-set logs often use string ids
     # like 'q_0017'); integral types all ride as long, strings as object
     qid_spark_type = queries.schema[query_id_col].dataType.simpleString()
@@ -1056,47 +979,12 @@ def batch_topk(
     # global df per matched term (sum over shards of the stored column) ->
     # idf; a metadata-sized aggregate, no posting blobs touched
     idf = matched.groupBy("term").agg(
-        F.log(
-            (F.lit(float(n)) - F.sum("df") + 0.5) / (F.sum("df") + 0.5) + 1.0
-        ).alias("idf")
+        bm25.idf_col(index.n_docs, F.sum("df")).alias("idf")
     )
     qtw = qt.join(idf, "term").withColumn("weight", F.col("w") * F.col("idf"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t_out, d_out, tf_out, dl_out = [], [], [], []
-            for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls = decode_postings_arrays(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(doc_ids, deletes)
-                    doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
-                t_out.extend([term] * len(doc_ids))
-                d_out.append(doc_ids)
-                tf_out.append(tfs)
-                dl_out.append(dls)
-            if d_out:
-                yield pd.DataFrame(
-                    {
-                        "term": pd.Series(t_out, dtype="object"),
-                        "doc_id": pd.Series(np.concatenate(d_out), dtype="int64"),
-                        "tf": pd.Series(np.concatenate(tf_out), dtype="int32"),
-                        "dl": pd.Series(np.concatenate(dl_out), dtype="int32"),
-                    }
-                )
-
-    decoded = matched.select("term", "postings").mapInPandas(
-        gen, schema=DECODED_SCHEMA
-    )
-    tf = F.col("tf").cast("double")
-    term_score = (
-        F.col("weight")
-        * tf
-        * F.lit(BM25_K1 + 1.0)
-        / (
-            tf
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl))
-        )
+    decoded = _decode_matching(matched, index.deletes)
+    term_score = bm25.term_score_col(
+        F.col("weight"), F.col("tf"), F.col("dl"), index.avgdl
     )
     scored = (
         decoded.join(hint(qtw.select("term", "query_id", "weight")), "term")
@@ -1252,6 +1140,16 @@ def docs_containing(
     return np.unique(np.concatenate([e["docs"] for e in entries]))
 
 
+def idf_from_entries(entries: list[dict], n_docs: int) -> dict[str, float]:
+    """term -> BM25 idf for decoded posting entries (:func:`_entries_for`).
+    Global df is recovered by summing the per-shard df of the rows fetched
+    — no separate terms-table lookup job."""
+    df_total: dict[str, int] = {}
+    for e in entries:
+        df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
+    return {t: bm25.idf(n_docs, d) for t, d in df_total.items()}
+
+
 def local_topk_core(
     index: IndexTables,
     weights: dict[str, float],
@@ -1262,23 +1160,13 @@ def local_topk_core(
     query multiplicity; synonym expansion uses decayed weights): fetch the
     pruned posting rows, reconstruct idf from their per-shard df, run the
     shard kernel. ONE Spark action per call (zero when fully cached)."""
-    import math
-
     terms = [t for t, w in weights.items() if w > 0]
     if not terms:
         return []
     entries = _entries_for(index, terms, row_cache)
     if not entries:
         return []
-    # Global df (hence idf) is recovered by summing the per-shard df of the
-    # rows just fetched — no separate terms-table lookup job.
-    df_total: dict[str, int] = {}
-    for e in entries:
-        df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
-    n = index.n_docs
-    idf = {
-        t: math.log((n - d + 0.5) / (d + 0.5) + 1.0) for t, d in df_total.items()
-    }
+    idf = idf_from_entries(entries, index.n_docs)
     out = _kernel_decoded(entries, weights, idf, index.avgdl, k)
     return list(zip(out["doc_id"].tolist(), out["score"].tolist()))
 

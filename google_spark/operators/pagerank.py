@@ -188,7 +188,6 @@ def hits(
     n_iter: int = 2,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """(node, authority, hub) — HITS (Kleinberg 1999), the classic sibling
     of PageRank: authority(v) = sum of hub over in-neighbors, hub(u) = sum
@@ -199,8 +198,11 @@ def hits(
 
     Scale shape mirrors :func:`pagerank`: each half-step is one edge-keyed
     join plus one hash aggregate at node grain; the normalizer rides in as
-    a broadcast scalar (no collect); lineage is truncated with
-    localCheckpoint on the same cadence. Rounds are O(|E|) shuffles —
+    a broadcast scalar (no collect). Each half-step's scores are
+    localCheckpointed before they are normalized: the rows and their sum
+    read the same frame, so without the cut every half-step would carry
+    two copies of the previous lineage and the plan would grow 4x per
+    round. Rounds are O(|E|) shuffles —
     HITS converges in a few rounds on web-ish graphs, and fixed small
     n_iter is the contract here."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -212,6 +214,7 @@ def hits(
     )
 
     def _normalize(df: DataFrame, col: str) -> DataFrame:
+        df = df.localCheckpoint()
         total = df.agg(F.sum(col).alias("_t"))
         return df.crossJoin(F.broadcast(total)).select(
             "node", (F.col(col) / F.col("_t")).alias(col)
@@ -242,9 +245,6 @@ def hits(
             ),
             "hub",
         )
-        if (it + 1) % checkpoint_interval == 0 or it == n_iter - 1:
-            a = a.localCheckpoint()
-            h = h.localCheckpoint()
     out = (
         a.join(h, "node")
         .select("node", "authority", "hub")

@@ -24,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from google_spark.functions import bm25
 from google_spark.functions.tokenizer import tokenize
 
 # Reference weights: pagerank 0.1, tfidf 10, title/url boost 100000
@@ -388,8 +389,6 @@ def bm25f_topk(
             for i, t in enumerate(uniq)
         ],
     )
-    import math
-
     st = per_doc.agg(
         F.count("*").alias("n_docs"),
         F.avg("dl_t").alias("avgdl_t"),
@@ -417,7 +416,7 @@ def bm25f_topk(
             bb = F.lit(1.0 - b_body) + F.lit(b_body) * F.col("dl_b") / F.lit(avgdl_b)
             tfw = tfw + F.lit(w_body) * F.col(f"tfb_{i}") / bb
         df_i = int(st[f"df_{i}"])
-        idf = math.log((n_docs - df_i + 0.5) / (df_i + 0.5) + 1.0)
+        idf = bm25.idf(n_docs, df_i)
         score = score + F.lit(float(qf[t]) * idf) * tfw / (F.lit(k1) + tfw)
     return (
         per_doc.select(F.col(id_col), F.round(score, 4).alias("score"))

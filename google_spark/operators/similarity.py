@@ -727,11 +727,18 @@ def pq_topk(
         emb, m=m, ksub=ksub, n_iters=n_iters, id_col=id_col, vec_col=vec_col
     )
     codes = pq_encode(emb, books, id_col=id_col, vec_col=vec_col)
-    probe = np.array(
-        emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()[0],
-        dtype=np.float64,
-    )
+    probe = _probe_vector(emb, probe_vec_id, id_col, vec_col)
     return _adc_topk(codes, books, probe, probe_vec_id, k, id_col)
+
+
+def _probe_vector(
+    emb: DataFrame, probe_vec_id: int, id_col: str, vec_col: str
+) -> np.ndarray:
+    """The probe's embedding as float64; ValueError when the id is absent."""
+    row = emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()
+    if row is None:
+        raise ValueError(f"probe {probe_vec_id} not found")
+    return np.array(row[0], dtype=np.float64)
 
 
 def _adc_topk(
@@ -802,10 +809,7 @@ def ivfpq_topk(
         emb, n_centroids=n_centroids, n_iters=n_iters,
         id_col=id_col, vec_col=vec_col,
     )
-    probe = np.array(
-        emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()[0],
-        dtype=np.float64,
-    )
+    probe = _probe_vector(emb, probe_vec_id, id_col, vec_col)
     c_norm = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
     )

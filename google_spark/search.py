@@ -909,16 +909,15 @@ class SearchEngine:
         posting cache; zero Spark jobs on a published bundle once the
         terms are hot."""
         self._maybe_refresh()
-        import math
         from collections import Counter
 
         import numpy as np
 
+        from google_spark.functions import bm25
         from google_spark.functions.codec import not_deleted_mask
         from google_spark.operators.index_query import (
-            BM25_B,
-            BM25_K1,
             _entries_for,
+            idf_from_entries,
             parse_boolean_query,
         )
 
@@ -937,25 +936,14 @@ class SearchEngine:
         )
         if not entries:
             return []
-        df_total: dict[str, int] = {}
-        for e in entries:
-            df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
-        n = self.index.n_docs
-        avgdl = self.index.avgdl
+        idf = idf_from_entries(entries, self.index.n_docs)
         d_parts, s_parts, m_parts = [], [], []
         for e in entries:
-            d = df_total[e["term"]]
-            w = float(qf[e["term"]]) * math.log((n - d + 0.5) / (d + 0.5) + 1.0)
-            tf = e["tf"].astype(np.float64)
-            dl = e["dl"].astype(np.float64)
-            s = (
-                w
-                * tf
-                * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-            )
+            w = float(qf[e["term"]]) * idf[e["term"]]
             d_parts.append(e["docs"])
-            s_parts.append(s)
+            s_parts.append(
+                bm25.term_scores(w, e["tf"], e["dl"], self.index.avgdl)
+            )
             m_parts.append(
                 np.full(
                     len(e["docs"]),
@@ -1037,13 +1025,17 @@ class SearchEngine:
         term asc). Driver-side NumPy over the decoded posting cache —
         zero Spark jobs on a published bundle once the terms are hot."""
         self._maybe_refresh()
-        import math
         from collections import Counter
 
         import numpy as np
 
+        from google_spark.functions import bm25
         from google_spark.functions.tokenizer import tokenize
-        from google_spark.operators.index_query import _entries_for
+        from google_spark.operators.index_query import (
+            _entries_for,
+            _topk_from_arrays,
+            idf_from_entries,
+        )
 
         qf = Counter(t for t, _ in tokenize(query, mode=self.mode))
         if not qf:
@@ -1053,43 +1045,26 @@ class SearchEngine:
         )
         if not entries:
             return []
-        df_total: dict[str, int] = {}
-        for e in entries:
-            df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
-        n = self.index.n_docs
-        avgdl = self.index.avgdl
-        idf = {
-            t: math.log((n - d + 0.5) / (d + 0.5) + 1.0)
-            for t, d in df_total.items()
-        }
-        from google_spark.operators.index_query import BM25_B, BM25_K1
-
+        idf = idf_from_entries(entries, self.index.n_docs)
         # two vectorized passes: (1) per-doc totals over ALL postings via
-        # unique+bincount, (2) breakdown rows materialized ONLY for
-        # postings whose doc made the top-k cut — a hot term with ~1M
-        # postings costs two NumPy passes, not ~1M Python tuples (this
+        # the kernel's top-k accumulation, (2) breakdown rows materialized
+        # ONLY for postings whose doc made the top-k cut — a hot term with
+        # ~1M postings costs two NumPy passes, not ~1M Python tuples (this
         # runs under the server's shared engine lock)
-        contribs: list[np.ndarray] = []
-        for e in entries:
-            tf = e["tf"].astype(np.float64)
-            dl = e["dl"].astype(np.float64)
-            contribs.append(
-                float(qf[e["term"]])
-                * idf[e["term"]]
-                * tf
-                * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
+        contribs = [
+            bm25.term_scores(
+                float(qf[e["term"]]) * idf[e["term"]],
+                e["tf"],
+                e["dl"],
+                self.index.avgdl,
             )
-        all_docs = np.concatenate([e["docs"] for e in entries])
-        if not len(all_docs):
+            for e in entries
+        ]
+        top = _topk_from_arrays([e["docs"] for e in entries], contribs, k)
+        if top.empty:
             return []
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        tot = np.bincount(inv, weights=np.concatenate(contribs))
-        top_idx = np.lexsort((uniq, -tot))[:k]
-        top_sorted = np.sort(uniq[top_idx])
-        totals = {
-            int(d): float(s) for d, s in zip(uniq[top_idx], tot[top_idx])
-        }
+        top_sorted = np.sort(top["doc_id"].to_numpy())
+        totals = dict(zip(top["doc_id"].tolist(), top["score"].tolist()))
         rows = []
         for e, contrib in zip(entries, contribs):
             docs = e["docs"]
@@ -1193,15 +1168,13 @@ class SearchEngine:
         executor-side). Same one-machine assumption as the rest of the
         serving tier — the distributed near_topk is the scale path."""
         self._maybe_refresh()
-        import math
-
         import numpy as np
 
+        from google_spark.functions import bm25
         from google_spark.functions.tokenizer import tokenize
         from google_spark.operators.index_query import (
-            BM25_B,
-            BM25_K1,
             _entries_for,
+            idf_from_entries,
             positions_for,
         )
 
@@ -1220,10 +1193,8 @@ class SearchEngine:
             raise ValueError("max_gap must be >= 1")
         entries = _entries_for(self.index, [a, b], self._postings_cache)
         by_term: dict[str, list] = {a: [], b: []}
-        df_total: dict[str, int] = {a: 0, b: 0}
         for e in entries:
             by_term[e["term"]].append(e)
-            df_total[e["term"]] += e["df"]
         if not by_term[a] or not by_term[b]:
             return []
         docs_a = np.concatenate([e["docs"] for e in by_term[a]])
@@ -1232,11 +1203,7 @@ class SearchEngine:
         if not len(cand):
             return []
         pos = positions_for(self.index, [a, b], set(int(x) for x in cand))
-        n = self.index.n_docs
-        idf = {
-            t: math.log((n - d + 0.5) / (d + 0.5) + 1.0)
-            for t, d in df_total.items()
-        }
+        idf = idf_from_entries(entries, self.index.n_docs)
         avgdl = self.index.avgdl
         # per-doc tf/dl via searchsorted over each term's decoded arrays
         tfdl: dict[str, dict[int, tuple[float, float]]] = {a: {}, b: {}}
@@ -1276,12 +1243,7 @@ class SearchEngine:
             score = 0.0
             for t in (a, b):
                 tf, dl = tfdl[t][d]
-                score += (
-                    idf[t]
-                    * tf
-                    * (BM25_K1 + 1.0)
-                    / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                )
+                score += bm25.term_scores(idf[t], tf, dl, avgdl)
             out.append({"doc_id": d, "min_gap": gap, "score": score})
         out.sort(key=lambda r: (-r["score"], r["doc_id"]))
         return out[:k]

@@ -23,7 +23,10 @@ from pyspark.sql import functions as F
 from google_spark.operators.catalog import SnapshotCatalog
 from google_spark.operators.index_build import build_index
 from google_spark.operators.index_query import (
+    boolean_topk,
     exhaustive_topk,
+    explain_topk,
+    near_topk,
     wand_topk,
     wand_topk_local,
 )
@@ -89,6 +92,9 @@ def test_delete_merge_on_read_all_paths(spark, identified, tmp_path):
     idx0 = cat.read(spark)
     before = wand_topk(idx0, QUERY, k=10).collect()
     victims = [r["doc_id"] for r in before[:3]]
+    # the NEAR probe below reaches the victims before the delete
+    near_before = near_topk(idx0, "def", "index", max_gap=20, k=10).collect()
+    assert set(victims) <= {r["doc_id"] for r in near_before}
 
     v = cat.delete_docs(victims)
     assert v == 2 and cat.manifest().operation == "delete"
@@ -97,12 +103,24 @@ def test_delete_merge_on_read_all_paths(spark, identified, tmp_path):
 
     # deleted docs are gone from every path; stats are still pre-delete
     assert idx.n_docs == idx0.n_docs
+    from google_spark.search import SearchEngine
+
+    eng = SearchEngine(idx)
     for ids in (
         [r["doc_id"] for r in wand_topk(idx, QUERY, k=10).collect()],
         [r["doc_id"] for r in exhaustive_topk(idx, QUERY, k=10).collect()],
         _local_ids(idx),
+        [r["doc_id"] for r in boolean_topk(idx, QUERY, k=10).collect()],
+        [r["doc_id"] for r in explain_topk(idx, QUERY, k=10).collect()],
+        [
+            r["doc_id"]
+            for r in near_topk(idx, "def", "index", max_gap=20, k=10).collect()
+        ],
+        [d for d, _ in eng.boolean(QUERY, k=10)],
+        [r["doc_id"] for r in eng.explain(QUERY, k=10)],
+        [r["doc_id"] for r in eng.near("def", "index", max_gap=20, k=10)],
     ):
-        assert not set(ids) & set(victims)
+        assert ids and not set(ids) & set(victims)
 
     # surviving docs keep their exact scores (df/avgdl frozen until compact)
     before_scores = {r["doc_id"]: r["score"] for r in before}

@@ -123,8 +123,8 @@ def test_sharding_invariance(spark, corpus_pdf, corpus_df):
 
 @pytest.mark.parametrize("query_id,query,k", reference_queries())
 def test_wand_pivot_loop_equals_fast_path(built, query_id, query, k, monkeypatch):
-    """Force the document-at-a-time WAND pivot loop (normally reserved for
-    candidate sets > WAND_FASTPATH_MAX) and require it to match the
+    """Force the block-max segment sweep (normally reserved for candidate
+    sets > WAND_FASTPATH_MAX postings) and require it to match the
     vectorized accumulation on every reference query."""
     from google_spark.operators import index_query
     from google_spark.operators.index_query import wand_topk_local

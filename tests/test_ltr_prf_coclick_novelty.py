@@ -294,6 +294,15 @@ class TestFunnel:
         with _pytest.raises(ValueError):
             funnel_counts(ev, [])
 
+    def test_duplicate_steps_raise(self, spark):
+        from google_spark.operators.events import funnel_counts
+
+        ev = spark.createDataFrame(
+            [], "user_id long, event_type string, ts timestamp"
+        )
+        with pytest.raises(ValueError, match="duplicate funnel steps"):
+            funnel_counts(ev, ["view", "click", "view"])
+
 
 class TestRetention:
     def test_triangle(self, spark):
@@ -346,6 +355,14 @@ class TestPq:
         # never beat it)
         by_id = {r["vec_id"]: r["adist"] for r in out}
         assert 100 in by_id and by_id[100] == out[0]["adist"]
+
+    def test_missing_probe_raises(self, emb):
+        from google_spark.operators.similarity import ivfpq_topk, pq_topk
+
+        with pytest.raises(ValueError, match="probe 999 not found"):
+            pq_topk(emb, probe_vec_id=999, k=5, m=4, ksub=8)
+        with pytest.raises(ValueError, match="probe 999 not found"):
+            ivfpq_topk(emb, 999, k=5, n_centroids=4, nprobe=4)
 
     def test_codes_shape_and_range(self, emb):
         from google_spark.operators.similarity import pq_encode, pq_train
